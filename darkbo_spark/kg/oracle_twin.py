@@ -121,16 +121,16 @@ def twin_entity_dict(spark: SparkSession) -> DataFrame:
     'The … Company' — the last exercises the leading-'the ' strip in
     link._norm), 20 persons, 5 cities.
 
-    The plan is memoized per session (queries.common.session_plan_memo):
-    it is a pure function of module constants, every kg twin query calls
-    it, and building the literal-array expression tree costs ~0.3 s of
-    py4j round-trips each time. A lazy plan is cached, never data."""
-    from darkbo_spark.queries.common import session_plan_memo
+    The plan is cached per session (queries.common.session_cached): it is
+    a pure function of module constants, every kg twin query calls it,
+    and building the literal-array expression tree costs ~0.3 s of py4j
+    round-trips each time. A lazy plan is cached, never data."""
+    from darkbo_spark.queries.common import session_cached
 
-    memo = session_plan_memo(spark)
-    cached = memo.get("twin_entity_dict")
-    if cached is not None:
-        return cached
+    return session_cached(spark, "twin_entity_dict", lambda: _twin_entity_dict(spark))
+
+
+def _twin_entity_dict(spark: SparkSession) -> DataFrame:
     adj = F.array(*[F.lit(x) for x in ADJ])
     noun = F.array(*[F.lit(x) for x in NOUN])
     first = F.array(*[F.lit(x) for x in FIRST])
@@ -166,13 +166,11 @@ def twin_entity_dict(spark: SparkSession) -> DataFrame:
         F.element_at(city, (F.col("id") + 1).cast("int")).alias("canonical")
     )
     cit = cit.select("canonical", F.col("canonical").alias("alias"))
-    out = (
+    return (
         comp.unionByName(pers)
         .unionByName(cit)
         .select(sha256_id_col("entity", "canonical").alias("eid"), "alias")
     )
-    memo["twin_entity_dict"] = out
-    return out
 
 
 # ---------------------------------------------------------------------------

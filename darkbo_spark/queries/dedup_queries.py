@@ -327,18 +327,16 @@ def _neardup_clusters_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs once per session instead of once per query. In-session reuse
     only: a fresh process recomputes everything from parquet."""
     from darkbo_spark.operators.dedup import neardup_clusters
-    from darkbo_spark.queries.common import session_plan_memo
+    from darkbo_spark.queries.common import session_cached
 
-    memo = session_plan_memo(spark)
-    key = ("neardup_clusters", sf_dir)
-    cached = memo.get(key)
-    if cached is None:
-        docs = _neardup_corpus(spark, sf_dir)
-        cached = neardup_clusters(
-            docs, "text", "doc_id", k=16, bands=4, hash_mode="portable"
-        )
-        memo[key] = cached
-    return cached
+    return session_cached(
+        spark,
+        ("neardup_clusters", sf_dir),
+        lambda: neardup_clusters(
+            _neardup_corpus(spark, sf_dir), "text", "doc_id",
+            k=16, bands=4, hash_mode="portable",
+        ),
+    )
 
 
 @_q("neardup_clusters_x", _CLUSTERS_ORACLE)

@@ -222,35 +222,31 @@ def kg_canonicalize_driver_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kg_linked_twin(spark: SparkSession, sf_dir: str, strategy: str) -> DataFrame:
     from darkbo_spark.kg.link import link_entities
     from darkbo_spark.kg.oracle_twin import twin_entity_dict
-    from darkbo_spark.queries.common import session_plan_memo
+    from darkbo_spark.queries.common import session_cached
 
     from pyspark import StorageLevel
 
-    # plan-handle memo: ~10 queries build this identical chain; the
+    def build() -> DataFrame:
+        linked = link_entities(
+            _twin_raw(spark, sf_dir), twin_entity_dict(spark), strategy=strategy
+        )
+        # persisted like _twin_raw: consumers (cooccurrence, degrees,
+        # pagerank, two-hop, incremental) reference this from 2+ branches
+        return linked.select(
+            "url",
+            F.col("sent_idx").cast("bigint").alias("sent_idx"),
+            "subj",
+            "pred",
+            "obj",
+            "subj_eid",
+            "obj_eid",
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+
+    # plan-handle cache: ~10 queries build this identical chain; the
     # CacheManager already dedups the DATA by canonical plan, but each
     # rebuild still pays ~0.5 s of py4j expression construction — return
     # the same lazy handle instead (per session, per strategy)
-    memo = session_plan_memo(spark)
-    key = ("kg_linked_twin", sf_dir, strategy)
-    cached = memo.get(key)
-    if cached is not None:
-        return cached
-    linked = link_entities(
-        _twin_raw(spark, sf_dir), twin_entity_dict(spark), strategy=strategy
-    )
-    # persisted like _twin_raw: consumers (cooccurrence, degrees,
-    # pagerank, two-hop, incremental) reference this from 2+ branches
-    out = linked.select(
-        "url",
-        F.col("sent_idx").cast("bigint").alias("sent_idx"),
-        "subj",
-        "pred",
-        "obj",
-        "subj_eid",
-        "obj_eid",
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    memo[key] = out
-    return out
+    return session_cached(spark, ("kg_linked_twin", sf_dir, strategy), build)
 
 
 @_q("kg_linked_x", linked_oracle_sql(240))
@@ -435,51 +431,47 @@ def _dated_linked_twin(
     against the (url, ts) side of the same scan, here a broadcast."""
     from darkbo_spark.kg.incremental import extract_and_link
     from darkbo_spark.kg.oracle_twin import raw_text_sql, twin_entity_dict
-    from darkbo_spark.queries.common import session_plan_memo
+    from darkbo_spark.queries.common import session_cached
 
-    # plan-handle memo for the default dictionary and for any custom
+    from pyspark import StorageLevel
+
+    def build() -> DataFrame:
+        docs = _t(spark, sf_dir, "documents")
+        pages = docs.filter(F.col("doc_id") < 240).select(
+            F.concat(
+                F.lit("https://twin.test/p/"), F.col("doc_id").cast("string")
+            ).alias("url"),
+            F.date_add(
+                F.to_date(F.lit("2024-01-01")), (F.col("doc_id") % 7).cast("int")
+            ).alias("warc_ts"),
+            F.lit("en").alias("lang"),
+            F.expr(raw_text_sql("doc_id")).alias("text"),
+        )
+        linked = extract_and_link(
+            pages, dictionary if dictionary is not None else twin_entity_dict(spark)
+        )
+        # PERSISTED by canonical plan: a dozen kg_* queries run this same
+        # E→S→T→L chain (UDF extraction over the twin pages), and several
+        # reference it from 2-3 plan branches (profiles:
+        # degrees+types+facts; dict-growth: mine+before; nil-both:
+        # subj∪obj) — without the cache each branch re-runs the extraction
+        # UDFs. The UDFs are module-level singletons, so the canonical plan
+        # — and therefore the cache entry — is shared across queries in a
+        # session; distinct dictionaries get their own (dictionary-sized)
+        # entries, LRU-evicted under pressure.
+        return linked.join(
+            F.broadcast(pages.select("url", "warc_ts")), "url"
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+
+    # plan-handle cache for the default dictionary and for any custom
     # dictionary whose caller declares a stable identity via `dict_key`
     # (the three NIL-mining queries share one 'holey' chain; the grown
     # dictionary is unique to dict_growth and passes no key): same
-    # rationale as _kg_linked_twin
-    memo = session_plan_memo(spark)
-    memoizable = dictionary is None or dict_key is not None
-    key = ("dated_linked_twin", sf_dir, dict_key)
-    if memoizable:
-        cached = memo.get(key)
-        if cached is not None:
-            return cached
-
-    docs = _t(spark, sf_dir, "documents")
-    pages = docs.filter(F.col("doc_id") < 240).select(
-        F.concat(F.lit("https://twin.test/p/"), F.col("doc_id").cast("string")).alias(
-            "url"
-        ),
-        F.date_add(
-            F.to_date(F.lit("2024-01-01")), (F.col("doc_id") % 7).cast("int")
-        ).alias("warc_ts"),
-        F.lit("en").alias("lang"),
-        F.expr(raw_text_sql("doc_id")).alias("text"),
-    )
-    linked = extract_and_link(
-        pages, dictionary if dictionary is not None else twin_entity_dict(spark)
-    )
-    # PERSISTED by canonical plan: a dozen kg_* queries run this same
-    # E→S→T→L chain (UDF extraction over the twin pages), and several
-    # reference it from 2-3 plan branches (profiles: degrees+types+facts;
-    # dict-growth: mine+before; nil-both: subj∪obj) — without the cache
-    # each branch re-runs the extraction UDFs. The UDFs are module-level
-    # singletons, so the canonical plan — and therefore the cache entry —
-    # is shared across queries in a session; distinct dictionaries get
-    # their own (dictionary-sized) entries, LRU-evicted under pressure.
-    from pyspark import StorageLevel
-
-    out = linked.join(
-        F.broadcast(pages.select("url", "warc_ts")), "url"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if memoizable:
-        memo[key] = out
-    return out
+    # rationale as _kg_linked_twin. A `dict_key` must name ONE dictionary
+    # content for the session's life.
+    if dictionary is not None and dict_key is None:
+        return build()
+    return session_cached(spark, ("dated_linked_twin", sf_dir, dict_key), build)
 
 
 @_q("kg_facts_asof_x", facts_oracle_sql(240, as_of="2024-01-05"))

@@ -631,7 +631,6 @@ def prebuild_query_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
     import tempfile
-    import time
 
     from darkbo_spark.retrieval.prebuild import prebuild_all, query_project
 
@@ -673,16 +672,9 @@ def prebuild_query_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         with os.fdopen(fd, "w") as f:
             f.write(payload)
         os.replace(tmp, faq_path)
-    # a concurrent builder holding the project lock is fine — wait briefly
-    # and retry; it is building the very indexes this query needs
-    for attempt in range(20):
-        try:
-            prebuild_all(spark, data_dir, out_dir)  # fingerprint-skips when warm
-            break
-        except RuntimeError as e:
-            if "lock" not in str(e) or attempt == 19:
-                raise
-            time.sleep(0.5)
+    # a concurrent builder holding the project lock is building the very
+    # indexes this query needs: wait for it; fingerprint-skips when warm
+    prebuild_all(spark, data_dir, out_dir, lock_wait_s=10.0)
     return query_project(
         spark, out_dir, "900", "fast table scan with window agg", top_k=3
     )

@@ -84,66 +84,81 @@ def _data_fingerprint(paths: dict[str, str | None]) -> str:
     return h.hexdigest()
 
 
-def prebuild_project(
-    spark: SparkSession,
-    project_id: str,
-    paths: dict[str, str | None],
-    out_dir: str,
-) -> dict:
-    """Build (or skip) one project's retrieval indexes. Returns
-    {"project_id", "fingerprint", "skipped": bool, "versions": {...}}."""
-    base = os.path.join(out_dir, project_id)
-    os.makedirs(base, exist_ok=True)
-    fp = _data_fingerprint(paths)
-    tables = {
-        name: SnapshotTable(base, name)
-        for name in ("items", "dense_index", "sparse_postings")
-    }
-    if all(t.current_fingerprint() == fp for t in tables.values()):
-        return {
-            "project_id": project_id,
-            "fingerprint": fp,
-            "skipped": True,
-            "versions": {n: t.current()["version"] for n, t in tables.items()},
-        }
+INDEX_TABLES = ("items", "dense_index", "sparse_postings")
 
+
+def publish_indexes(
+    base: str, fingerprint: str, items_fn, lock_wait_s: float, what: str
+) -> bool:
+    """Publish one project's three index tables (items, dense_index,
+    sparse_postings) under `base`, all carrying `fingerprint`, under the
+    project's BuildLock with keep-last-3 retention. `items_fn()` returns
+    the (id, title, content) item corpus and is only called when a build
+    is needed. Returns False when every table was already current — on
+    entry, or because a concurrent publisher finished while we waited."""
+    tables = [SnapshotTable(base, name) for name in INDEX_TABLES]
+
+    def fresh() -> bool:
+        return all(t.current_fingerprint() == fingerprint for t in tables)
+
+    if fresh():
+        return False
     lock = BuildLock(base, "prebuild")
-    owner = f"prebuild-{time.time()}"
-    if not lock.acquire(owner):
-        raise RuntimeError(
-            f"prebuild lock held by {lock.owner()} for project {project_id}"
-        )
-    try:
-        items = project_items(spark, project_id, paths)
+    owner = f"prebuild-{os.getpid()}-{time.time()}"
+    with lock.hold(owner, lock_wait_s, what, ready=fresh):
+        if fresh():  # double-checked under the lock
+            return False
+        items = items_fn()
         # one Arrow pass: embeddings ride along with the items scan
         dense = items.select("id", embed_udf(F.col("content")).alias("embedding"))
         postings = build_bm25_postings(
             items, text_col="content", id_col="id", persist=False
         )
-        versions = {
-            "items": tables["items"].publish(items, fp),
-            "dense_index": tables["dense_index"].publish(dense, fp),
-            "sparse_postings": tables["sparse_postings"].publish(postings, fp),
-        }
-        for t in tables.values():
+        for t, df in zip(tables, (items, dense, postings)):
+            t.publish(df, fingerprint)
+        for t in tables:
             t.expire(retain_last=3)
-    finally:
-        lock.release(owner)
+    return True
+
+
+def prebuild_project(
+    spark: SparkSession,
+    project_id: str,
+    paths: dict[str, str | None],
+    out_dir: str,
+    lock_wait_s: float = 0.0,
+) -> dict:
+    """Build (or skip) one project's retrieval indexes. Returns
+    {"project_id", "fingerprint", "skipped": bool, "versions": {...}}.
+    `lock_wait_s`: how long to wait for a concurrent builder of the same
+    project (0 = fail fast with RuntimeError)."""
+    base = os.path.join(out_dir, project_id)
+    os.makedirs(base, exist_ok=True)
+    fp = _data_fingerprint(paths)
+    built = publish_indexes(
+        base, fp, lambda: project_items(spark, project_id, paths), lock_wait_s,
+        f"prebuild {project_id}",
+    )
     return {
         "project_id": project_id,
         "fingerprint": fp,
-        "skipped": False,
-        "versions": versions,
+        "skipped": not built,
+        "versions": {
+            name: SnapshotTable(base, name).current()["version"]
+            for name in INDEX_TABLES
+        },
     }
 
 
-def prebuild_all(spark: SparkSession, data_dir: str, out_dir: str) -> dict:
+def prebuild_all(
+    spark: SparkSession, data_dir: str, out_dir: str, lock_wait_s: float = 0.0
+) -> dict:
     """The prebuild_kb.py main loop: discover every project under data_dir
     and build each one's indexes (checksum-skip per project)."""
     projects = discover_project_dirs(data_dir)
     results = {}
     for pid, paths in sorted(projects.items()):
-        results[pid] = prebuild_project(spark, pid, paths, out_dir)
+        results[pid] = prebuild_project(spark, pid, paths, out_dir, lock_wait_s)
     return results
 
 

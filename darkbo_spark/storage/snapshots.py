@@ -26,7 +26,8 @@ import os
 import shutil
 import tempfile
 import time
-from typing import Optional
+from contextlib import contextmanager
+from typing import Callable, Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -328,6 +329,34 @@ class BuildLock:
             except FileNotFoundError:
                 pass  # stolen between check and remove — nothing to release
 
+    @contextmanager
+    def hold(
+        self,
+        owner: str,
+        wait_s: float,
+        what: str,
+        ready: Optional[Callable[[], bool]] = None,
+    ) -> Iterator[None]:
+        """Hold the lock for the `with` body, polling every 0.25 s for up to
+        `wait_s` (0 = fail fast). When `ready()` turns true while waiting —
+        a concurrent publisher finished our work — the body runs WITHOUT
+        the lock, so it must re-check `ready()` before publishing. Raises
+        RuntimeError naming `what` when the wait runs out."""
+        deadline = time.time() + wait_s
+        while not self.acquire(owner):
+            if ready is not None and ready():
+                yield
+                return
+            if time.time() >= deadline:
+                raise RuntimeError(
+                    f"{what} lock busy ({self.path}, held by {self.owner()})"
+                )
+            time.sleep(0.25)
+        try:
+            yield
+        finally:
+            self.release(owner)
+
 
 def partition_metrics(spark: SparkSession, data_path: str) -> list[dict]:
     """Per-output-file row counts for a published version — the lineage/
@@ -391,22 +420,11 @@ def maintain(
     threshold = len(dirs_before) if partitioned else target_files
     needs_compact = len(files_before) > threshold
 
-    base = os.path.dirname(table.dir)
-    lock = BuildLock(base, table.name)
-    owner = f"maint-{os.getpid()}-{time.time()}"
-    deadline = time.time() + lock_wait_s
-    while not lock.acquire(owner):
-        if time.time() > deadline:
-            raise RuntimeError(
-                f"maintenance lock busy for {table.name}: {lock.owner()}"
-            )
-        time.sleep(0.25)
-    try:
+    lock = BuildLock(os.path.dirname(table.dir), table.name)
+    with lock.hold(f"maint-{os.getpid()}-{time.time()}", lock_wait_s, "maintenance"):
         if needs_compact:
             table.compact(spark, target_files=target_files)
         expired = table.expire(retain_last=retain_last)
-    finally:
-        lock.release(owner)
 
     files_after = table.data_files()
     return {

@@ -3,14 +3,15 @@ spine's checkpoint-resume discipline (kg/pipeline.py) applied to the
 corpus-shaping flow: gate → exact dedup → per-domain cap → deterministic
 sample → token-budget shard pack.
 
-Each stage publishes a versioned table (storage factory — Iceberg-ready)
-whose fingerprint chains (parent_fp, stage, params, CODE_VERSION), so a
-rerun recomputes ONLY stages whose input, parameters, or code changed; a
-kill between stages resumes downstream-only; per-stage metrics rows
-(stage, fingerprint, rows, wall) are published alongside. Stage inputs
-are read BACK from the published tables — each stage's cost is paid once
-per fingerprint, which is what makes a multi-day 100 TB pipeline
-restartable instead of all-or-nothing.
+Each stage runs through storage/stages.StageRunner: a versioned table
+whose fingerprint chains sha256(parent_fp : stage : params :
+CODE_VERSION), so a rerun recomputes ONLY stages whose input, parameters,
+or code changed; a kill between stages resumes downstream-only; each run
+publishes per-file row counts of the stages it ran to `_metrics` and
+expires every table to keep-last-3. Stage inputs are read BACK from the
+published tables — each stage's cost is paid once per fingerprint, which
+is what makes a multi-day 100 TB pipeline restartable instead of
+all-or-nothing.
 
 The stage SEMANTICS are the same operators the one-job composed twin
 uses (queries/pipeline_queries.training_pipeline, driver-hash-proven vs
@@ -20,30 +21,13 @@ tests/test_training_pipeline.py.
 
 from __future__ import annotations
 
-import hashlib
-import time
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from darkbo_spark.functions import text_analysis as ta
-from darkbo_spark.storage import BuildLock, make_table
+from darkbo_spark.storage.stages import PipelineResult, StageRunner
 
 CODE_VERSION = "tp1"
-
-
-def _fp(*parts: str) -> str:
-    return hashlib.md5("|".join(parts).encode()).hexdigest()
-
-
-@dataclass
-class TrainingRunResult:
-    tables: dict = field(default_factory=dict)
-    stages_run: list[str] = field(default_factory=list)
-    stages_skipped: list[str] = field(default_factory=list)
-    rows: dict = field(default_factory=dict)
-    timings: dict = field(default_factory=dict)
 
 
 def run_training_pipeline(
@@ -58,7 +42,7 @@ def run_training_pipeline(
     sample_fraction: float = 0.8,
     sample_salt: str = "pipe1",
     shard_budget: int = 2000,
-) -> TrainingRunResult:
+) -> PipelineResult:
     """docs must carry (doc_id, text, lang, n_chars); `domain_col` is a
     Column over those columns yielding the registered domain (a URL
     column in production — the caller owns where domains come from, the
@@ -69,42 +53,11 @@ def run_training_pipeline(
     from darkbo_spark.operators.sampling import deterministic_sample
     from darkbo_spark.operators.sharding import pack_shards
 
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    res = TrainingRunResult()
-    lock = BuildLock(out_dir, "training_pipeline")
-    owner = f"tp-{time.time()}"
-    for _ in range(240):
-        if lock.acquire(owner):
-            break
-        time.sleep(0.5)
-    else:
-        raise RuntimeError(f"training pipeline locked by {lock.owner()}")
-    try:
-        metrics_tbl = make_table(out_dir, "_metrics")
-        metrics_rows: list[dict] = []
-
-        def stage(name: str, parent_fp: str, params: str, build):
-            fp = _fp(parent_fp, name, params, CODE_VERSION)
-            tbl = make_table(out_dir, name)
-            res.tables[name] = tbl
-            if tbl.current_fingerprint() == fp:
-                res.stages_skipped.append(name)
-                return tbl, fp
-            lock.heartbeat(owner)
-            t0 = time.time()
-            tbl.publish(build(), fp)
-            wall = round(time.time() - t0, 3)
-            n = tbl.read(spark).count()
-            res.stages_run.append(name)
-            res.timings[name] = wall
-            res.rows[name] = n
-            metrics_rows.append(
-                {"stage": name, "run_fingerprint": fp, "rows": n, "wall_s": wall}
-            )
-            return tbl, fp
-
+    # a concurrent run on the same out_dir is waited for (up to 120 s)
+    with StageRunner(
+        spark, out_dir, "training_pipeline", CODE_VERSION, lock_wait_s=120.0
+    ) as run:
+        stage = run.stage
         gate_params = f"q{quality_min}"
         gated_tbl, fp1 = stage(
             "gated", input_fingerprint, gate_params,
@@ -132,7 +85,7 @@ def run_training_pipeline(
                 cap_tbl.read(spark), sample_fraction, salt=sample_salt
             ),
         )
-        packed_tbl, fp5 = stage(
+        stage(
             "packed", fp4, f"b{shard_budget}",
             lambda: pack_shards(
                 samp_tbl.read(spark).select(
@@ -142,12 +95,4 @@ def run_training_pipeline(
                 budget=shard_budget,
             ),
         )
-        if metrics_rows:
-            import pandas as pd
-
-            metrics_tbl.publish(
-                spark.createDataFrame(pd.DataFrame(metrics_rows)), _fp(fp5, "metrics")
-            )
-        return res
-    finally:
-        lock.release(owner)
+    return run.result

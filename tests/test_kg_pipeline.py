@@ -161,10 +161,18 @@ def test_metrics_and_retention(spark, out_dir, result):
     stages = {r.stage for r in rows}
     assert {"docs", "raw_triples", "kg_triples"} <= stages
     assert all(r.rows >= 0 for r in rows)
+    # four more publishing runs (after the first, each recomputes only the
+    # dictionary-sized kg_entities stage), so _metrics is published more
+    # than three times
+    for _ in range(4):
+        os.remove(os.path.join(out_dir, "kg_entities", "current.json"))
+        res = run_pipeline(spark, out_dir, n_pages=N_PAGES, seed=SEED)
+        assert "kg_entities" in res.stages_run
     # retention actually enforced: the pipeline expires to keep-last-3, so
     # no table dir may accumulate more than 3 committed versions (earlier
     # tests reran the pipeline with changed inputs = multiple publishes)
-    for name in ("docs", "raw_triples", "kg_triples", "eid_map", "kg_entities"):
+    for name in ("docs", "raw_triples", "kg_triples", "eid_map", "kg_entities",
+                 "_metrics"):
         tbl = SnapshotTable(out_dir, name)
         committed = tbl.versions()
         assert len(committed) <= 3, (name, [m["version"] for m in committed])

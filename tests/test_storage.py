@@ -63,6 +63,52 @@ def test_build_lock(tmp_path):
     lock.release("run_b")
 
 
+def test_hold_times_out_naming_what(tmp_path):
+    import pytest
+
+    lock = BuildLock(str(tmp_path), "busy")
+    assert lock.acquire("holder")
+    try:
+        with pytest.raises(RuntimeError, match="nightly-compaction lock busy"):
+            with lock.hold("waiter", 0.3, "nightly-compaction"):
+                raise AssertionError("body must not run while the lock is held")
+    finally:
+        lock.release("holder")
+
+
+def test_hold_ready_ends_wait_without_acquiring(tmp_path):
+    import time
+
+    lock = BuildLock(str(tmp_path), "rdy")
+    assert lock.acquire("holder")
+    calls = []
+
+    def ready():
+        calls.append(1)
+        return len(calls) >= 2  # the concurrent publisher finishes while we wait
+
+    t0 = time.time()
+    with lock.hold("waiter", 30.0, "rdy", ready=ready):
+        assert lock.owner() == "holder"  # never taken from the holder
+    assert time.time() - t0 < 5.0
+    assert lock.owner() == "holder"
+    lock.release("holder")
+
+
+def test_hold_releases_on_exit_and_on_exception(tmp_path):
+    import pytest
+
+    lock = BuildLock(str(tmp_path), "rel")
+    with lock.hold("run_a", 0, "rel"):
+        assert lock.owner() == "run_a"
+    assert not os.path.exists(lock.path)
+    with pytest.raises(ValueError):
+        with lock.hold("run_b", 0, "rel"):
+            assert os.path.exists(lock.path)
+            raise ValueError("stage failed")
+    assert not os.path.exists(lock.path)
+
+
 def test_stale_lock_takeover(tmp_path):
     lock = BuildLock(str(tmp_path), "tbl2", stale_after_s=0.0)
     assert lock.acquire("dead_run")
